@@ -64,8 +64,9 @@ final case class Pipeline(
     * pass a 100 TB deployment schedules nightly, the scheduled-job slot
     * the reference's staleness-removal tasks occupy
     * (neo4j_staleness_removal_task.py). Gates contribute their stores
-    * via `maintenanceActions` (CurationStream, MediaDedupStream,
-    * EmbedDedupStream, DedupGateStream); a tripped guardrail aborts
+    * via `Maintenance.claimActions` over each gate's `claimStores`
+    * (CurationStream, MediaDedupStream, EmbedDedupStream,
+    * DedupGateStream); a tripped guardrail aborts
     * that store only and is reported, any other failure propagates.
     * Each store's outcome also lands on the statsd-style metrics hook
     * (`job.<name>.maintain.swept` / `.aborted`), fire-and-forget like

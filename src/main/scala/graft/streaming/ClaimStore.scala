@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Hfs
 
@@ -39,10 +40,8 @@ object ClaimStore {
     * column, and sorts each file by key so parquet row-group min/max
     * stats recover per-key selectivity inside the group file. Probe
     * cost stays O(touched): [[ClaimStore.readPruned]] dir-prunes on pg
-    * and key-filters inside. Deployments tune via SPARK_GRAFT_CLAIM_PG
-    * (1 restores one-dir-per-key; larger groups = fewer, larger files). */
-  val PgDiv: Int =
-    math.max(1, sys.env.get("SPARK_GRAFT_CLAIM_PG").map(_.toInt).getOrElse(16))
+    * and key-filters inside. */
+  val PgDiv: Int = 16
 
   /** Base-layout partition column (the key-group id). Never part of the
     * claim schema — it exists only in the folded base's directory names
@@ -61,7 +60,8 @@ object ClaimStore {
 final class GuardrailAbort(msg: String) extends IllegalStateException(msg)
 
 /** The ONE at-least-once verdict READ CONTRACT shared by every streaming
-  * gate ([[CurationStream]], [[MediaDedupStream]], [[DedupGateStream]]):
+  * gate ([[CurationStream]], [[MediaDedupStream]], [[EmbedDedupStream]],
+  * [[DedupGateStream]]; read back through [[StreamGate.readVerdicts]]):
   * verdicts append before claims, claims before the checkpoint, so the
   * only corrupted delivery is a batch replayed AFTER its claims landed —
   * the replay sees its own winners as already claimed and re-emits them
@@ -103,10 +103,13 @@ private[streaming] object StreamVerdicts {
 
 /** The ONE generational side-store discipline shared by every streaming
   * gate — [[CurationStream]]'s exact-md5 claim classes,
-  * [[MediaDedupStream]]'s perceptual fingerprints, and
-  * [[DedupGateStream]]'s admitted shingle index all accrete through this
-  * type, so a long-running stream can never regrow the
-  * one-file-per-batch-forever / O(store)-shuffle-per-batch shape.
+  * [[MediaDedupStream]]'s perceptual fingerprints,
+  * [[EmbedDedupStream]]'s int8 vector claims, and [[DedupGateStream]]'s
+  * admitted shingle index all accrete through this type, committed in
+  * [[StreamGate.commit]]'s one crash order, so a long-running stream can
+  * never regrow the one-file-per-batch-forever /
+  * O(store)-shuffle-per-batch shape. `schema` is the claim row shape:
+  * every read, fold and rewrite normalizes to it.
   *
   * Layout — a THREE-LEVEL log-structured store (the StreamPublish
   * manifest-swap discipline at the bottom level):
@@ -163,8 +166,14 @@ private[streaming] object StreamVerdicts {
   * O(claims · log store) — not the O(N · store) a single-level fold pays
   * over an N-batch stream. Per-BATCH probe work never scans more than
   * the pruned base keys + the bounded small levels. */
-final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
+final case class ClaimStore(dir: String, schema: StructType,
+    partitionCol: Option[String] = None) {
   import ClaimStore.{CompactDeltaFiles, ConsumedManifest, RunsPerClass}
+
+  /** The claim schema as an empty frame — the read of a store with no
+    * files yet. */
+  private def empty(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   private[streaming] def deltaFiles: Seq[Path] =
     Hfs.children(s"$dir/delta")(_.endsWith(".parquet"))
@@ -222,11 +231,10 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
   /** Committed base generation (CURRENT, if any major has run) ++ live
     * minor runs ++ delta files — MINUS any inputs a committed filtered
     * fold already consumed (see [[ClaimStore.ConsumedManifest]]) —
-    * columns normalized to `empty`'s order (the base read returns
+    * columns normalized to `schema`'s order (the base read returns
     * `partitionCol` as a trailing partition column). Raw rows: plain-fold
     * crash duplicates survive; the caller's read semantics absorb them. */
-  def read(spark: SparkSession, empty: DataFrame): DataFrame =
-    readWhere(spark, empty, None)
+  def read(spark: SparkSession): DataFrame = readWhere(spark, None)
 
   /** [[read]] restricted to the probe keys this batch touches: the base
     * generation's scan PARTITION-PRUNES to the matching `gen=N/pg=v`
@@ -235,7 +243,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * sorted group file), and the small levels — at most the delta
     * budget plus O(log) minor runs — take the key filter as an
     * ordinary pushed predicate. */
-  def readPruned(spark: SparkSession, empty: DataFrame, keys: Seq[Int]): DataFrame = {
+  def readPruned(spark: SparkSession, keys: Seq[Int]): DataFrame = {
     val pc = partitionCol.getOrElse(
       throw new IllegalStateException(s"claim store $dir has no probe-key layout"))
     // the base prunes DIRECTORIES on the key-group column (pg) and rows
@@ -243,14 +251,14 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // min/max stats); deltas/runs carry the key as a plain column and
     // take only the key predicate
     val pgs = keys.map(_ / ClaimStore.PgDiv).distinct
-    readWhere(spark, empty, Some(col(pc).isin(keys.map(Integer.valueOf): _*)),
+    readWhere(spark, Some(col(pc).isin(keys.map(Integer.valueOf): _*)),
       basePred = Some(col(ClaimStore.PgCol).isin(pgs.map(Integer.valueOf): _*)))
   }
 
-  private def readWhere(spark: SparkSession, empty: DataFrame,
+  private def readWhere(spark: SparkSession,
       pred: Option[org.apache.spark.sql.Column],
       basePred: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val sel = empty.columns.toSeq.map(col)
+    val sel = schema.fieldNames.toSeq.map(col)
     // compare scheme-stripped on BOTH sides: the session that wrote the
     // manifest and the one reading it may qualify the same path
     // differently (file:/ vs file:///, host:port vs nameservice)
@@ -269,7 +277,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // shape); claim payloads (strings, hashes, codes) are non-null by
     // construction and pass through untouched.
     def conform(raw: DataFrame): DataFrame =
-      empty.schema.fields.foldLeft(raw) { (d, f) =>
+      schema.fields.foldLeft(raw) { (d, f) =>
         if (!d.columns.contains(f.name))
           // typed-zero backfill is a NUMERIC contract (pre-epoch stores
           // read as epoch 0); a non-numeric upgrade column backfills
@@ -299,7 +307,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // file per live probe key that is an O(key-space)-task job per
     // read, paid by every per-batch probe (measured: a 1107-task ~3 s
     // stage inside each batch at sf0.1; guide §6 small files hurt
-    // twice). The claim schema is statically known (`empty`), files
+    // twice). The claim schema is statically known (`schema`), files
     // written before a column existed read it as null (additive
     // evolution), and conform() backfills exactly as the old
     // mergeSchema read did — so the footer pass bought nothing.
@@ -307,7 +315,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
         extra: Option[org.apache.spark.sql.Column] = None): Option[DataFrame] =
       if (paths.isEmpty) None
       else {
-        val raw = spark.read.schema(empty.schema).parquet(paths: _*)
+        val raw = spark.read.schema(schema).parquet(paths: _*)
         // `extra` (the base's pg directory predicate) must apply BEFORE
         // conform/select: pg is a discovered partition column of the
         // base layout only — deltas and runs never see it
@@ -319,7 +327,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
         basePred).toSeq ++
         part(live(minorRuns).filter(hasParquet)).toSeq ++
         part(live(deltaFiles)).toSeq
-    if (parts.isEmpty) pred.fold(empty)(empty.filter)
+    if (parts.isEmpty) { val e = empty(spark); pred.fold(e)(e.filter) }
     else parts.reduce(_ union _)
   }
 
@@ -329,7 +337,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     *
     * A gate appending to SEVERAL stores in one batch must use
     * [[appendDelta]] for every store first and [[maybeCompact]] only
-    * after the last write: a compaction deletes the consumed delta
+    * after the last write — [[StreamGate.commit]]'s order: a compaction
+    * deletes the consumed delta
     * files, and a later write whose lineage re-reads this batch's store
     * scan (Spark recomputes lazily; a cache hit is not guaranteed under
     * foreachBatch) would resolve vanished paths — observed as
@@ -338,7 +347,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * that still exist. */
   def append(spark: SparkSession, claims: DataFrame): Unit = {
     appendDelta(claims)
-    maybeCompact(spark, claims.limit(0))
+    maybeCompact(spark)
   }
 
   /** The write half of [[append]]: one delta file, no fold. */
@@ -359,7 +368,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * has been written or materialized (see [[append]]). Returns the
     * parquet bytes this call rewrote (0 when under budget) — the
     * rewrite-amplification observable the scale rehearsal bounds. */
-  def maybeCompact(spark: SparkSession, empty: DataFrame): Long = {
+  def maybeCompact(spark: SparkSession): Long = {
     finishPendingCleanup()
     // a manifest that SURVIVES cleanup means a consumed input could not
     // be deleted. The minor/tier folds below read delta and run files
@@ -371,22 +380,21 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     // excludes the consumed paths, and its new manifest re-lists them.)
     if (pendingConsumed().nonEmpty) 0L
     else if (deltaFiles.size < CompactDeltaFiles) 0L
-    else if (graft.sources.Stage.currentTarget(dir).isEmpty) major(spark, empty)
+    else if (graft.sources.Stage.currentTarget(dir).isEmpty) major(spark)
     else {
-      var bytes = minorFold(spark, empty)
-      bytes += tierMergeFullClasses(spark, empty)
+      var bytes = minorFold(spark)
+      bytes += tierMergeFullClasses(spark)
       val baseBytes = graft.sources.Stage.currentTarget(dir)
         .map(t => Hfs.parquetBytes(new Path(t))).getOrElse(0L)
-      if (minorRuns.map(parquetBytes).sum >= baseBytes) bytes += major(spark, empty)
+      if (minorRuns.map(parquetBytes).sum >= baseBytes) bytes += major(spark)
       bytes
     }
   }
 
   /** Force a full fold — base ∪ minors ∪ deltas → one fresh generation.
-    * Kept public for batch-style store maintenance
-    * ([[CurationStream.compactFingerprints]]); the streaming path goes
+    * Kept public for batch-style store maintenance; the streaming path goes
     * through [[maybeCompact]]'s leveled policy. */
-  def compact(spark: SparkSession, empty: DataFrame): Unit = { major(spark, empty); () }
+  def compact(spark: SparkSession): Unit = { major(spark); () }
 
   /** OFFLINE rewrite — fold the whole store through `f` into one fresh
     * generation (the major-fold commit discipline: consumed-input
@@ -396,9 +404,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * MIGRATION path (a centroid refresh re-keys every claim's probe
     * partition — `f` maps rows to their new pk). Run between batches;
     * O(store) by design, for passes that are rare by design. */
-  def rewrite(spark: SparkSession, empty: DataFrame,
-      f: DataFrame => DataFrame): Unit = {
-    majorWith(spark, empty, f)
+  def rewrite(spark: SparkSession, f: DataFrame => DataFrame): Unit = {
+    majorWith(spark, f)
     ()
   }
 
@@ -416,10 +423,10 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * pruned serving layout and the consumed-input manifest makes a
     * crashed sweep finish (never silently un-happen) on the next fold;
     * returns the claim rows dropped. */
-  def retentionSweep(spark: SparkSession, empty: DataFrame, minEpoch: Long,
+  def retentionSweep(spark: SparkSession, minEpoch: Long,
       maxDropFrac: Double, epochCol: String = "epoch"): Long = {
     finishPendingCleanup()
-    val counted = read(spark, empty).distinct()
+    val counted = read(spark).distinct()
       .agg(count(lit(1)).as("total"),
         count(when(col(epochCol) < minEpoch, 1)).as("doomed"))
       .collect()(0)
@@ -429,7 +436,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
       throw new GuardrailAbort(
         s"retention sweep on $dir would drop $doomed of $total claims " +
           s"(> $maxDropFrac) — refusing; raise the guardrail to proceed")
-    major(spark, empty, keep = Some(col(epochCol) >= minEpoch))
+    major(spark, keep = Some(col(epochCol) >= minEpoch))
     doomed
   }
 
@@ -442,11 +449,11 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * the swap the old CURRENT still covers every byte, after it the
     * manifest excludes the consumed inputs until the next fold deletes
     * them. */
-  private def major(spark: SparkSession, empty: DataFrame,
+  private def major(spark: SparkSession,
       keep: Option[org.apache.spark.sql.Column] = None): Long =
-    majorWith(spark, empty, df => keep.foldLeft(df)(_ filter _))
+    majorWith(spark, df => keep.foldLeft(df)(_ filter _))
 
-  private def majorWith(spark: SparkSession, empty: DataFrame,
+  private def majorWith(spark: SparkSession,
       f: DataFrame => DataFrame): Long = {
     if (!Hfs.isDir(dir)) return 0L
     finishPendingCleanup()
@@ -459,8 +466,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     val consumedRuns = listRuns()
     // normalize back to the claim schema: a rewrite may re-derive
     // columns (e.g. a migration re-keys pk), never add or drop them
-    val folded = f(read(spark, empty))
-      .select(empty.columns.toSeq.map(col): _*).distinct()
+    val folded = f(read(spark))
+      .select(schema.fieldNames.toSeq.map(col): _*).distinct()
     partitionCol match {
       case Some(pc) =>
         // one shuffle keyed on the KEY GROUP → at most one file per
@@ -521,15 +528,14 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
 
   /** MINOR fold: the consumed deltas alone → one committed plain-layout
     * `minor/run=M` — O(new claims), the base untouched. */
-  private def minorFold(spark: SparkSession, empty: DataFrame): Long = {
+  private def minorFold(spark: SparkSession): Long = {
     sweepDeadRuns()
     val consumed = deltaFiles
     if (consumed.isEmpty) return 0L
     val next = nextRunDir()
-    val sel = empty.columns.toSeq.map(col)
     // explicit schema: no footer-inference job (see readWhere)
-    spark.read.schema(empty.schema).parquet(consumed.map(_.toString): _*)
-      .select(sel: _*).distinct()
+    spark.read.schema(schema).parquet(consumed.map(_.toString): _*)
+      .select(schema.fieldNames.toSeq.map(col): _*).distinct()
       .coalesce(runFiles(consumed.map(parquetBytes).sum))
       .write.parquet(next.toString)
     deleteDeltas(consumed)
@@ -540,7 +546,7 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
     * fold that class into one run (which lands ~2 classes up) — the
     * size-tiered cascade that keeps live-run count O(log store) and
     * never rewrites a larger class to absorb a smaller one. */
-  private def tierMergeFullClasses(spark: SparkSession, empty: DataFrame): Long = {
+  private def tierMergeFullClasses(spark: SparkSession): Long = {
     def sizeClass(bytes: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(bytes, 1L))
     var bytes = 0L
@@ -551,9 +557,8 @@ final case class ClaimStore(dir: String, partitionCol: Option[String] = None) {
         .groupBy(_._2).values.find(_.size >= RunsPerClass).foreach { cls =>
           val runs = cls.map(_._1)
           val next = nextRunDir()
-          val sel = empty.columns.toSeq.map(col)
-          spark.read.schema(empty.schema).parquet(runs.map(_.toString): _*)
-            .select(sel: _*).distinct()
+          spark.read.schema(schema).parquet(runs.map(_.toString): _*)
+            .select(schema.fieldNames.toSeq.map(col): _*).distinct()
             .coalesce(runFiles(runs.map(parquetBytes).sum))
             .write.parquet(next.toString)
           runs.foreach(p => Hfs.delete(p))

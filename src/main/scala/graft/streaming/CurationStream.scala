@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{DedupOps, TextOps}
 import graft.sources.Tables
@@ -53,21 +54,10 @@ import scala.jdk.CollectionConverters._
   * way. */
 object CurationStream {
 
-  /** Fold the claim store into one generation once the delta dir holds
-    * this many files — the bound on the store's file count (the shared
-    * [[ClaimStore]] budget; re-exported for specs). */
-  val CompactDeltaFiles: Int = ClaimStore.CompactDeltaFiles
-
-  private def deltaFiles(fpStore: String): Seq[org.apache.hadoop.fs.Path] =
-    graft.sources.Hfs.children(s"$fpStore/delta")(_.endsWith(".parquet"))
-
   /** Text claim rows: pk = the fingerprint's probe key, `epoch` the
-    * RETENTION stamp (caller-threaded monotone build epoch + batch id)
-    * consumed by [[sweepClaims]]. */
-  private def emptyClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
-  }
+    * RETENTION stamp (caller-threaded monotone build epoch + batch id). */
+  private val TextClaims: StructType =
+    StructType.fromDDL("pk INT NOT NULL, fp STRING, epoch BIGINT NOT NULL")
 
   /** Probe key for the exact-md5 claim classes: a stable hash of the
     * fingerprint into 2048 partitions, so a batch's dedup probe reads
@@ -77,24 +67,6 @@ object CurationStream {
   private def fpPk(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (crc32(c) % 2048).cast("int")
 
-  private def textClaimStore(fpStore: String): ClaimStore =
-    ClaimStore(fpStore, partitionCol = Some("pk"))
-
-  /** The FULL claim-class set — restart/audit reads. Per-batch probes
-    * use the pruned read inside [[run]] instead. Duplicates across
-    * levels (a crash between swap and cleanup) collapse in the
-    * distinct(). */
-  private[streaming] def claimedClasses(spark: SparkSession,
-      fpStore: String): DataFrame =
-    textClaimStore(fpStore).read(spark, emptyClaims(spark))
-      .select("fp").distinct()
-
-  /** Fold the store into one fresh `gen=N` — the shared
-    * [[ClaimStore.compact]] swap discipline. */
-  private[streaming] def compactClaims(spark: SparkSession,
-      fpStore: String): Unit =
-    textClaimStore(fpStore).compact(spark, emptyClaims(spark))
-
   /** Generational TAIL COUNTER for the incremental stores — the logical
     * (doc, token) offsets the next batch appends at, kept OUTSIDE the
     * store so a batch never scans the accreted data to learn its own
@@ -102,13 +74,11 @@ object CurationStream {
     * batch — quadratic over a stream's lifetime — and counts crash
     * duplicates, drilling holes in the dense position sequence).
     *
-    * One (batch_id, n_docs, n_tokens) row lands per committed batch as
-    * a delta file; reads union the committed base generation with the
-    * deltas and resolve per batch_id, so a read is O(delta budget + 1)
-    * tiny files however large the store grows. At the file budget the
-    * set folds into a fresh `gen=N` base by the same atomic CURRENT
-    * swap as [[compactClaims]] — per-BATCH rows are retained (the row
-    * count is batch-count-sized, trivially one file; it is the FILE
+    * One (batch_id, n_docs, n_tokens) row lands per committed batch in
+    * a [[ClaimStore]] (a delta file per batch, folded at the delta
+    * budget), and reads resolve per batch_id, so a read is a bounded
+    * set of tiny files however large the store grows. Per-BATCH rows
+    * are retained (the row count is batch-count-sized; it is the FILE
     * count that must stay bounded) because the batch_id rows double as
     * the REDELIVERY GUARD: a replayed batch whose row already exists
     * skips its store append entirely, making the append idempotent.
@@ -119,17 +89,14 @@ object CurationStream {
     * positions stay dense and immutable under every single-crash
     * schedule. */
   private[graft] object TailCounter {
-    private def rows(spark: SparkSession, dir: String): DataFrame = {
-      import spark.implicits._
-      val empty = Seq.empty[(Long, Long, Long)].toDF("batch_id", "n_docs", "n_tokens")
-      val base = graft.sources.Stage.currentTarget(dir).toSeq
-      val parts = base ++ deltaFiles(dir).map(_.toString)
-      if (parts.isEmpty) empty
-      // explicit schema: a schemaless parquet read pays a one-task-per-
-      // file footer-inference job first (see ClaimStore.readWhere)
-      else spark.read.schema(empty.schema).parquet(parts: _*)
+    private val Rows: StructType = StructType.fromDDL(
+      "batch_id BIGINT NOT NULL, n_docs BIGINT NOT NULL, n_tokens BIGINT NOT NULL")
+
+    private def store(dir: String): ClaimStore = ClaimStore(dir, Rows)
+
+    private def rows(spark: SparkSession, dir: String): DataFrame =
+      store(dir).read(spark)
         .dropDuplicates("batch_id") // swap-then-cleanup crash leaves copies
-    }
 
     /** The accreted (n_old, t_old) offsets as a broadcastable 1-row
       * frame. */
@@ -158,132 +125,46 @@ object CurationStream {
       else Some((all.map(_.getLong(1)).sum, all.map(_.getLong(2)).sum))
     }
 
-    /** Record a committed batch append; folds the file set into one
-      * generation at the delta budget (same swap discipline as
-      * [[compactClaims]] — the foreachBatch loop is single-threaded, so
-      * nothing races the fold). */
+    /** Record a committed batch append (the store folds at its delta
+      * budget; each tail store has one writer, so nothing races the
+      * fold). */
     def append(spark: SparkSession, dir: String, batchId: Long,
         nDocs: Long, nTokens: Long): Unit = {
       import spark.implicits._
-      import graft.sources.Hfs
-      Seq((batchId, nDocs, nTokens)).toDF("batch_id", "n_docs", "n_tokens")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$dir/delta")
-      if (deltaFiles(dir).size >= CompactDeltaFiles) {
-        val gens = Hfs.children(dir)(_.startsWith("gen="))
-          .map(_.getName.stripPrefix("gen=").toLong)
-        val nextName = s"gen=${(gens :+ -1L).max + 1}"
-        val next = s"$dir/$nextName"
-        val consumed = deltaFiles(dir)
-        rows(spark, dir).coalesce(1).write.parquet(next)
-        graft.sources.Stage.atomicRepoint(dir, next)
-        Hfs.children(dir)(n => n.startsWith("gen=") && n != nextName)
-          .foreach(p => Hfs.delete(p))
-        (consumed :+ new org.apache.hadoop.fs.Path(s"$dir/delta", "_SUCCESS"))
-          .foreach(p => Hfs.delete(p, recursive = false))
-      }
+      store(dir).append(spark,
+        Seq((batchId, nDocs, nTokens)).toDF("batch_id", "n_docs", "n_tokens"))
     }
-  }
-
-  /** Per-batch curation against the accreting claim store. `evalSh` is
-    * the static benchmark shingle set (one `g` column), persisted by
-    * the caller for the stream's lifetime.
-    *
-    * With `storeDir` set, each batch also appends its ADMITTED documents
-    * to an incremental curated store: the batch's survivors rank among
-    * themselves by the same md5 training order as the batch build
-    * (`LayoutOps.shuffleRanks`), offset by the [[TailCounter]]'s logical
-    * store size — the `corpusShuffleUpsert` tail discipline run per
-    * micro-batch, so existing positions are immutable, every shard gains
-    * only an appended tail file, and a training run consuming the store
-    * never re-reads a shard file it already has. `tokenStoreDir` is the
-    * tokenized twin: admitted docs BPE-encode and pack into `ctx`-token
-    * context windows continuing the counter's global token offset.
-    * At-least-once: the counter's batch_id row lands AFTER the store
-    * append and doubles as the redelivery guard — a replayed batch whose
-    * row exists skips its append; the one crash window (store rows
-    * landed, counter row did not) re-appends the SAME rows at the SAME
-    * positions, so a read side that needs crash immunity drops exact
-    * duplicates — positions stay dense and immutable under every
-    * single-crash schedule. */
-  /** Media claim rows for the streaming cross-modal gate — the
-    * [[MediaDedupStream]] pre-exploded probe-key layout on the audio
-    * loudness hash, epoch-stamped like every production claim store. */
-  private def emptyMediaClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long, Long)].toDF("pk", "claim_id", "fhash", "epoch")
   }
 
   /** Video claim rows — the temporal-gradient signature is radius-0
     * (planted transforms cancel STRUCTURALLY, `VideoCodec.vhashOf`), so
     * the probe is an exact equi-join; pk is a stable hash of the
     * signature purely for the pruned-read layout. */
-  private def emptyVideoClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, String, Long)].toDF("pk", "claim_id", "vhash", "epoch")
-  }
+  private val VideoClaims: StructType = StructType.fromDDL(
+    "pk INT NOT NULL, claim_id BIGINT NOT NULL, vhash STRING, epoch BIGINT NOT NULL")
 
-  /** RETENTION for the gate's claim stores — the epoch-stamped
-    * [[ClaimStore.retentionSweep]] discipline across the text exact-md5
-    * classes AND (when the media gate ran) the audio/video perceptual
-    * stores, each under its own guardrail: a class/asset whose every
-    * claim aged out re-admits on its next arrival, in-horizon claims
-    * keep rejecting. Run between stream runs (offline, like
-    * compaction). Returns (text, media, video) claim rows dropped — a
-    * store that never existed sweeps vacuously to 0. */
-  def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): (Long, Long, Long) = (
-    textClaimStore(s"${outDir}_fps")
-      .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac),
-    ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyMediaClaims(spark), minEpoch, maxDropFrac),
-    ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyVideoClaims(spark), minEpoch, maxDropFrac))
-
-  /** RETENTION for the per-batch funnel store: batch-grain observability
-    * frames older than `minBatchId` fold away under the guardrail — the
-    * one store whose natural epoch IS the batch id (observability has a
-    * horizon; claims have semantics). */
-  def sweepFunnel(spark: SparkSession, outDir: String, minBatchId: Long,
-      maxDropFrac: Double): Long =
-    funnelStore(outDir).retentionSweep(spark, emptyFunnel(spark),
-      minBatchId, maxDropFrac, epochCol = "batch_id")
-
-  /** This gate's deployed stores as [[Maintenance.Action]]s — the three
-    * claim stores (text exact-md5, audio perceptual, video signature)
-    * each sweep-then-compact on the claim-epoch horizon, the funnel
-    * store on its batch-id horizon. Compose with the other gates'
-    * actions and run the lot through [[Maintenance.run]]: a tripped
-    * guardrail aborts its store only. */
-  def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double, minBatchId: Long): Seq[Maintenance.Action] = {
-    def claimAction(store: ClaimStore, empty: => DataFrame,
-        horizon: Long, epochCol: String) =
-      Maintenance.Action(store.dir, "retention+compact", () =>
-        Maintenance.sweepAndCompact(spark, store, empty, horizon,
-          maxDropFrac, epochCol))
-    Seq(
-      claimAction(textClaimStore(s"${outDir}_fps"),
-        emptyClaims(spark), minEpoch, "epoch"),
-      claimAction(ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk")),
-        emptyMediaClaims(spark), minEpoch, "epoch"),
-      claimAction(ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk")),
-        emptyVideoClaims(spark), minEpoch, "epoch"),
-      claimAction(funnelStore(outDir),
-        emptyFunnel(spark), minBatchId, "batch_id"))
-  }
+  /** The gate's claim stores, text exact-md5 classes then (when the media
+    * gate runs) the audio perceptual store — the [[MediaDedupStream]]
+    * pre-exploded probe-key layout on the loudness hash — and the video
+    * signature store. Each is epoch-stamped: a [[ClaimStore.retentionSweep]]
+    * between stream runs re-admits a class/asset whose every claim aged
+    * out, and a store that never existed sweeps vacuously to 0. */
+  def claimStores(outDir: String): Seq[ClaimStore] = Seq(
+    ClaimStore(s"${outDir}_fps", TextClaims, Some("pk")),
+    ClaimStore(s"${outDir}_mfps", MediaDedupStream.Claims, Some("pk")),
+    ClaimStore(s"${outDir}_vmfps", VideoClaims, Some("pk")))
 
   private def vhashPk(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (crc32(c) % 2048).cast("int")
 
-  /** Per-batch funnel rows (batch-grain observability metadata). */
-  private def emptyFunnel(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String, Long, Long)]
-      .toDF("batch_id", "stage", "n_docs", "n_tokens")
-  }
+  /** The per-batch funnel store (batch-grain observability metadata) —
+    * its natural epoch IS the batch id, so it sweeps on
+    * `epochCol = "batch_id"` (observability has a horizon; claims have
+    * semantics). */
+  def funnelStore(outDir: String): ClaimStore = ClaimStore(s"${outDir}_funnel", Funnel)
 
-  private def funnelStore(outDir: String): ClaimStore =
-    ClaimStore(s"${outDir}_funnel")
+  private val Funnel: StructType = StructType.fromDDL(
+    "batch_id BIGINT NOT NULL, stage STRING, n_docs BIGINT NOT NULL, n_tokens BIGINT NOT NULL")
 
   /** The incremental TRAINING stores as [[Maintenance.Action]]s — the
     * small-files compaction pass ([[graft.operators.LayoutOps
@@ -311,6 +192,27 @@ object CurationStream {
         Maintenance.Result(0L, Some(s"files $before -> $after"))
       }))
 
+  /** Per-batch curation against the accreting claim store. `evalSh` is
+    * the static benchmark shingle set (one `g` column), persisted by
+    * the caller for the stream's lifetime.
+    *
+    * With `storeDir` set, each batch also appends its ADMITTED documents
+    * to an incremental curated store: the batch's survivors rank among
+    * themselves by the same md5 training order as the batch build
+    * (`LayoutOps.shuffleRanks`), offset by the [[TailCounter]]'s logical
+    * store size — the `corpusShuffleUpsert` tail discipline run per
+    * micro-batch, so existing positions are immutable, every shard gains
+    * only an appended tail file, and a training run consuming the store
+    * never re-reads a shard file it already has. `tokenStoreDir` is the
+    * tokenized twin: admitted docs BPE-encode and pack into `ctx`-token
+    * context windows continuing the counter's global token offset.
+    * At-least-once: the counter's batch_id row lands AFTER the store
+    * append and doubles as the redelivery guard — a replayed batch whose
+    * row exists skips its append; the one crash window (store rows
+    * landed, counter row did not) re-appends the SAME rows at the SAME
+    * positions, so a read side that needs crash immunity drops exact
+    * duplicates — positions stay dense and immutable under every
+    * single-crash schedule. */
   def run(
       incoming: DataFrame,
       evalSh: DataFrame,
@@ -324,12 +226,9 @@ object CurationStream {
       epochBase: Long = 0L,
       vocabDir: Option[String] = None): StreamingQuery = {
     val spark = incoming.sparkSession
-    val fpStore = s"${outDir}_fps"
-    val textStore = textClaimStore(fpStore)
-    val mediaStore = ClaimStore(s"${outDir}_mfps", partitionCol = Some("pk"))
-    val videoStore = ClaimStore(s"${outDir}_vmfps", partitionCol = Some("pk"))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val Seq(textStore, mediaStore, videoStore) = claimStores(outDir)
+    val funnel = funnelStore(outDir)
+    StreamGate.start(incoming, checkpoint) { (batch, batchId) =>
         val b = batch
           // spread the quality/hash/shingle pass across cores: an
           // arriving micro-batch carries its SOURCE file partitioning
@@ -440,7 +339,7 @@ object CurationStream {
           import graft.functions.HammingDistance.hamming
           val (probes, vProbes) = probesOf.get
           val matches = probes
-            .join(mediaStore.readPruned(spark, emptyMediaClaims(spark), touchedA)
+            .join(mediaStore.readPruned(spark, touchedA)
               .select(col("pk"), col("claim_id"), col("fhash").as("h_c")), Seq("pk"))
             .select("doc_id", "claim_id", "h_t", "h_c")
             .dropDuplicates("doc_id", "claim_id")
@@ -451,7 +350,7 @@ object CurationStream {
           // an incoming asset duplicates exactly the stored signatures
           // it EQUALS — a pk-pruned read followed by an exact equi-join
           val vMatches = vProbes
-            .join(videoStore.readPruned(spark, emptyVideoClaims(spark), touchedV)
+            .join(videoStore.readPruned(spark, touchedV)
               .select(col("pk"), col("claim_id"), col("vhash")),
               Seq("pk", "vhash"))
             .select("doc_id", "claim_id")
@@ -479,7 +378,7 @@ object CurationStream {
           // plus the small levels, the same contract as the
           // perceptual/embedding stores
           val claimedB = textStore
-            .readPruned(spark, emptyClaims(spark), touchedFps)
+            .readPruned(spark, touchedFps)
             .select("fp").distinct()
           val textVerdict = b
             .join(claimedB.withColumn("already_claimed", lit(true)),
@@ -511,23 +410,14 @@ object CurationStream {
             .persist(StorageLevel.MEMORY_AND_DISK)
           verdict.count()
           try {
-            // PHASE-PARALLEL batch commit (guide §2.6): the verdict
-            // write, the funnel frame, and the training-store appends
-            // are INDEPENDENT consumers of the one persisted verdict
-            // pass, writing to disjoint dirs — submitted together so
-            // each small job's task tail back-fills with the next
-            // job's tasks instead of paying every straggler tail in
-            // sequence. The ordering that must survive is BETWEEN
-            // phases, not within them: every consumer lands before any
-            // claim append (a crash after claims but before a consumer
-            // would lose that consumer's rows forever — the replay
-            // sees its winners already claimed), and claims land
-            // before the folds (write-all-then-fold-all). Each
-            // consumer is individually replay-safe whatever subset a
-            // crash leaves behind (verdict dups resolve per-doc, the
-            // funnel by tuple-max, the stores by the TailCounter
-            // redelivery guard), so concurrency adds no new crash
-            // schedule.
+            // PHASE-PARALLEL batch commit (guide §2.6, StreamGate.commit):
+            // the verdict write, the funnel frame, and the training-store
+            // appends are INDEPENDENT consumers of the one persisted
+            // verdict pass, writing to disjoint dirs. Each consumer is
+            // individually replay-safe whatever subset a crash leaves
+            // behind (verdict dups resolve per-doc, the funnel by
+            // tuple-max, the stores by the TailCounter redelivery
+            // guard), so concurrency adds no new crash schedule.
             val writeVerdict: () => Unit = () =>
               verdict.drop("fp", "n_words")
                 .write.mode(SaveMode.Append).parquet(outDir)
@@ -593,7 +483,7 @@ object CurationStream {
               // claim stores (delta per batch, fold at the budget);
               // replay rows differing from the original delivery both
               // survive the fold and resolve at read (tuple-max)
-              funnelStore(outDir).appendDelta(
+              funnel.appendDelta(
                 one.withColumn("batch_id", lit(batchId))
                   .select("batch_id", "stage", "n_docs", "n_tokens"))
             }
@@ -698,68 +588,44 @@ object CurationStream {
                 TailCounter.append(spark, tail, buildEpoch, nAdmitted, nTokens)
               }
             }
-            // PHASE 1: every verdict consumer lands (concurrently —
-            // see the ordering argument above)
-            StreamPar.runAll(
-              Seq(writeVerdict, writeFunnel) ++ writeStore ++ writeTokens)
-            // PHASE 2: claims accrete for every batch winner —
-            // contaminated or not (stage order: dedup decides before
-            // decontamination drops). Write-all-then-fold-all (the
-            // ClaimStore multi-store discipline): every delta lands
-            // before either store folds, so a lazily recomputed frame
-            // never resolves deleted files. The three claim stores are
-            // disjoint dirs — their appends overlap.
-            // epoch stamp: a RESTARTED stream's batch ids begin at 0
-            // again, so retention epochs are epochBase + batchId with
-            // the base threaded by the caller as a monotone build
+            // claims accrete for every batch winner — contaminated or
+            // not (stage order: dedup decides before decontamination
+            // drops). epoch stamp: a RESTARTED stream's batch ids begin
+            // at 0 again, so retention epochs are epochBase + batchId
+            // with the base threaded by the caller as a monotone build
             // number (the MediaDedupStream discipline)
             val epoch = lit(epochBase + batchId)
-            StreamPar.runAll(Seq(() =>
-              textStore.appendDelta(
+            StreamGate.commit(spark,
+              consumers = Seq(writeVerdict, writeFunnel) ++ writeStore ++ writeTokens,
+              claims = Seq(textStore ->
                 verdict.filter(col("keep_quality") && !col("is_dup"))
                   .select(fpPk(col("fp")).as("pk"), col("fp"),
-                    epoch.as("epoch")))) ++
-              // every perceptually NOVEL asset claims its fingerprint —
-              // independent of the text verdicts, the MediaDedupStream
-              // claim semantics (novelty is against earlier batches only)
-              mediaVerdict.toSeq.flatMap { mv => Seq(
-                () => mediaStore.appendDelta(mv.filter(!col("media_dup"))
-                  .select(col("doc_id").as("claim_id"), col("ahash").as("fhash"))
-                  .select(col("claim_id"), col("fhash"),
-                    graft.operators.MultimodalOps.hashBands("fhash").as(Seq("band", "bv")))
-                  .withColumn("pk", (col("band") * 256 + col("bv")).cast("int"))
-                  .select("pk", "claim_id", "fhash")
-                  .withColumn("epoch", epoch)),
-                // every perceptually NOVEL video asset claims its signature
-                () => videoStore.appendDelta(mv.filter(!col("video_dup"))
-                  .select(vhashPk(col("vhash")).as("pk"),
-                    col("doc_id").as("claim_id"), col("vhash"),
-                    epoch.as("epoch"))))
-              })
-            // PHASE 3: the folds — each store folds only its own files
-            StreamPar.runAll(Seq(
-              () => { textStore.maybeCompact(spark, emptyClaims(spark)); () },
-              () => { funnelStore(outDir).maybeCompact(spark, emptyFunnel(spark)); () }) ++
-              (if (!mediaGate) Seq.empty else Seq(
-                () => { mediaStore.maybeCompact(spark, emptyMediaClaims(spark)); () },
-                () => { videoStore.maybeCompact(spark, emptyVideoClaims(spark)); () })))
+                    epoch.as("epoch"))) ++
+                // every perceptually NOVEL asset claims its fingerprint —
+                // independent of the text verdicts, the MediaDedupStream
+                // claim semantics (novelty is against earlier batches only)
+                mediaVerdict.toSeq.flatMap { mv => Seq(
+                  mediaStore -> mv.filter(!col("media_dup"))
+                    .select(col("doc_id").as("claim_id"), col("ahash").as("fhash"))
+                    .select(col("claim_id"), col("fhash"),
+                      graft.operators.MultimodalOps.hashBands("fhash").as(Seq("band", "bv")))
+                    .withColumn("pk", (col("band") * 256 + col("bv")).cast("int"))
+                    .select("pk", "claim_id", "fhash")
+                    .withColumn("epoch", epoch),
+                  // every perceptually NOVEL video asset claims its signature
+                  videoStore -> mv.filter(!col("video_dup"))
+                    .select(vhashPk(col("vhash")).as("pk"),
+                      col("doc_id").as("claim_id"), col("vhash"),
+                      epoch.as("epoch")))
+                },
+              alsoFold = Seq(funnel))
           } finally verdict.unpersist()
         } finally {
           media.foreach(_.unpersist())
           b.unpersist()
         }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
-
-  /** The deterministic two-batch arrival fixture shared by the stream
-    * gates: even doc_ids land as the first micro-batch, odd as the
-    * second; `evalSh` is persisted for the stream's lifetime (callers
-    * own the unpersist). */
-  private case class StreamFixture(src: DataFrame, evalSh: DataFrame,
-      out: String, ckpt: String, root: java.nio.file.Path)
 
   /** The benchmark shingle set every stream fixture decontaminates
     * against — the SAME PLAN as the decontamination family's eval stage
@@ -771,23 +637,26 @@ object CurationStream {
   private def evalShingles(spark: SparkSession, dir: String): DataFrame =
     DedupOps.evalShingleSet(spark, dir)
 
-  private def streamFixture(spark: SparkSession, dir: String,
-      tag: String, extra: Seq[String] = Seq.empty): StreamFixture = {
-    val root = graft.sources.TmpStores.pidScopedRoot(tag)
-    (Seq("in", "out", "out_fps", "out_funnel", "ckpt") ++ extra).foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val evalSh = evalShingles(spark, dir)
-    val src = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    StreamFixture(src, evalSh, root.resolve("out").toString,
-      root.resolve("ckpt").toString, root)
+  private def documents(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "documents").select("doc_id", "text")
+
+  /** The deterministic two-batch arrival every curation query replays
+    * (even doc_ids land as the first micro-batch, odd as the second):
+    * a fresh fixture root and its input stream. */
+  private def parity(spark: SparkSession, dir: String,
+      tag: String): (StreamGate.Fixture, DataFrame) = {
+    val docs = documents(spark, dir)
+    val fx = StreamGate.fixture(tag,
+      docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
+    (fx, StreamGate.source(fx.in, docs.schema))
   }
+
+  /** The text gate's verdicts under the shared at-least-once read. */
+  private def readTextVerdicts(spark: SparkSession, out: String): DataFrame =
+    StreamGate.readVerdicts(spark, out,
+      Seq("doc_id", "keep_quality", "is_dup", "is_contaminated", "admitted"),
+      anyTrue = Seq("keep_quality", "is_contaminated", "admitted"),
+      everyTrue = Seq("is_dup"))
 
   /** Oracle-gated query: all documents stream through the gate as two
     * micro-batches (even doc_ids arrive first, then odd), with the
@@ -796,17 +665,15 @@ object CurationStream {
     * them relationally: the class winner is the quality-passing doc
     * minimizing (batch index, doc_id). */
   def curationStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation")
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt).awaitTermination()
+    val (fx, src) = parity(spark, dir, "graft-curation")
+    run(src, evalShingles(spark, dir), fx.path("out"), fx.path("ckpt"))
+      .awaitTermination()
     // no persist: the verdicts live on disk already — re-executing the
     // returned frame is one scan of the small store, no cached state
     // outlives this call. The shared per-doc resolution (not an
     // arbitrary dropDuplicates row) makes redelivered appends resolve
     // deterministically: a doc's own claim proves its admission.
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(fx.out),
-      anyTrue = Seq("keep_quality", "is_contaminated", "admitted"),
-      everyTrue = Seq("is_dup"))
-      .select("doc_id", "keep_quality", "is_dup", "is_contaminated", "admitted")
+    readTextVerdicts(spark, fx.path("out"))
   }
 
   /** Oracle-gated query for the INCREMENTAL curated store: the same
@@ -820,10 +687,15 @@ object CurationStream {
     * regression in the gate, the ranking, the offset fold, or the
     * write→read round trip flips a manifest row red. */
   def curatedStoreIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-inc", Seq("store", "store_tail"))
-    val store = fx.root.resolve("store").toString
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt,
-      storeDir = Some(store), nShards = 4).awaitTermination()
+    val (fx, src) = parity(spark, dir, "graft-curation-inc")
+    run(src, evalShingles(spark, dir), fx.path("out"), fx.path("ckpt"),
+      storeDir = Some(fx.path("store")), nShards = 4).awaitTermination()
+    curatedManifest(spark, fx.path("store"))
+  }
+
+  /** The curated store read back from disk into its per-shard loader
+    * manifest. */
+  private def curatedManifest(spark: SparkSession, store: String): DataFrame = {
     spark.catalog.refreshByPath(store) // drop FileStatusCache listings taken mid-append
     graft.operators.LayoutOps
       .shardManifest(spark, spark.read.parquet(graft.operators.LayoutOps.storeDataDir(store)), 4, tokensCol = "n_words")
@@ -845,9 +717,9 @@ object CurationStream {
     * window prefix sum — so a regression in the gate, the tokenizer, the
     * offset fold, or the window continuation flips a manifest row red. */
   def tokenizedStoreIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-tok", Seq("tstore", "tstore_tail"))
-    val store = fx.root.resolve("tstore").toString
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt,
+    val (fx, src) = parity(spark, dir, "graft-curation-tok")
+    val store = fx.path("tstore")
+    run(src, evalShingles(spark, dir), fx.path("out"), fx.path("ckpt"),
       tokenStoreDir = Some(store), nShards = 4, ctx = 2048L).awaitTermination()
     spark.catalog.refreshByPath(store) // drop FileStatusCache listings taken mid-append
     graft.operators.LayoutOps
@@ -868,20 +740,12 @@ object CurationStream {
       dir: String, tag: String = "graft-curation-tokref"): (String, String) = {
     val spark0 = spark
     import spark0.implicits._
-    val root = graft.sources.TmpStores.pidScopedRoot(tag)
-    Seq("in", "in2", "out", "out_fps", "out_funnel", "ckpt", "ckpt2",
-      "tstore", "tstore_tail", "vocab").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
-    val store = root.resolve("tstore").toString
-    val vocabDir = root.resolve("vocab").toString
-    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
+    val docs = documents(spark, dir)
+    val fx = StreamGate.fixture(tag, docs.filter(col("doc_id") % 2 === 0))
+    StreamGate.writeBatches(fx.path("in2"), docs.filter(col("doc_id") % 2 === 1))
+    val out = fx.path("out")
+    val store = fx.path("tstore")
+    val vocabDir = fx.path("vocab")
     val evalSh = evalShingles(spark, dir)
     // v0 ships as a real artifact generation (gen=0 + CURRENT swap)
     TextOps.BpeMergeTable.zipWithIndex
@@ -889,9 +753,7 @@ object CurationStream {
       .toDF("merge_rank", "lhs", "rhs")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$vocabDir/gen=0")
     graft.sources.Stage.atomicRepoint(vocabDir, s"$vocabDir/gen=0")
-    def src(path: String) = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), evalSh, out, root.resolve("ckpt").toString,
+    run(StreamGate.source(fx.in, docs.schema), evalSh, out, fx.path("ckpt"),
       tokenStoreDir = Some(store), nShards = 4, ctx = 2048L,
       vocabDir = Some(vocabDir)).awaitTermination()
     // vocab drift between stream runs: retrain on the accreted corpus,
@@ -899,8 +761,8 @@ object CurationStream {
     val merges = TextOps.bpeMergesFromTokens(
       docs.select(explode(TextOps.tokens(col("text"))).as("word")), 6)
     graft.operators.LayoutOps.shipVocabIfBetter(spark, docs, vocabDir, merges)
-    run(src(in2), evalSh, out, root.resolve("ckpt2").toString,
-      tokenStoreDir = Some(store), nShards = 4, ctx = 2048L,
+    run(StreamGate.source(fx.path("in2"), docs.schema), evalSh, out,
+      fx.path("ckpt2"), tokenStoreDir = Some(store), nShards = 4, ctx = 2048L,
       vocabDir = Some(vocabDir), epochBase = 1L).awaitTermination()
     (store, vocabDir)
   }
@@ -1030,10 +892,10 @@ object CurationStream {
     * the pre-claim truth and doc/token counts resolve from the SAME
     * delivery. */
   def curationStreamFunnelQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-funnel",
-      Seq("out_mfps", "out_vmfps"))
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt, mediaGate = true).awaitTermination()
-    funnelStore(fx.out).read(spark, emptyFunnel(spark))
+    val (fx, src) = parity(spark, dir, "graft-curation-funnel")
+    run(src, evalShingles(spark, dir), fx.path("out"), fx.path("ckpt"),
+      mediaGate = true).awaitTermination()
+    funnelStore(fx.path("out")).read(spark)
       .groupBy("batch_id", "stage")
       .agg(max(struct(col("n_docs"), col("n_tokens"))).as("_m"))
       .select(col("batch_id"), col("stage"),
@@ -1053,11 +915,9 @@ object CurationStream {
     * sweep that drops an in-horizon claim, keeps an aged one, or loses a
     * class entirely flips a row red. */
   def claimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val root = graft.sources.TmpStores.pidScopedRoot("graft-claim-retention")
     graft.sources.TmpStores.deleteRecursively(root.resolve("store"))
-    val st = ClaimStore(root.resolve("store").toString, partitionCol = Some("pk"))
-    def empty = Seq.empty[(Int, String, Long)].toDF("pk", "fp", "epoch")
+    val st = ClaimStore(root.resolve("store").toString, TextClaims, Some("pk"))
     val f = Tables(spark, dir, "documents")
       .select(col("doc_id"), md5(col("text")).as("fp"))
     // probe-key space sized to the corpus: the folded base writes one
@@ -1073,11 +933,11 @@ object CurationStream {
     st.appendDelta(claims(1))
     // pre-sweep counts must be lineage-free: the sweep rewrites the very
     // files this frame reads
-    val pre = st.read(spark, empty).groupBy("fp")
+    val pre = st.read(spark).groupBy("fp")
       .agg(count(lit(1)).as("n_claims_before"))
       .localCheckpoint(true)
-    st.retentionSweep(spark, empty, minEpoch = 1L, maxDropFrac = 0.9)
-    val post = st.read(spark, empty).groupBy("fp")
+    st.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.9)
+    val post = st.read(spark).groupBy("fp")
       .agg(count(lit(1)).as("n_claims_after"))
     pre.join(post, Seq("fp"), "left")
       .select(col("fp"), col("n_claims_before"),
@@ -1087,7 +947,7 @@ object CurationStream {
   }
 
   /** Oracle-gated RETENTION LIFECYCLE through the TEXT gate itself — the
-    * full production story [[sweepClaims]] enables (the
+    * full production story the claim epochs enable (the
     * [[MediaDedupStream.audioClaimRetentionQuery]] pattern on exact-md5
     * classes): even doc_ids stream as batch 0 (epoch 0) and odd doc_ids
     * as batch 1 (epoch 1, judged against the batch-0 claims as usual);
@@ -1102,37 +962,23 @@ object CurationStream {
     * claim set, the post-sweep store as exactly the classes batch 1
     * claimed, and the twin verdicts against that surviving set. */
   def curationClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-curation-ret")
-    Seq("in", "in2", "out", "out_fps", "out_funnel", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
-    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
-    docs.filter(col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
+    val (fx, src) = parity(spark, dir, "graft-curation-ret")
+    val out = fx.path("out")
     val evalSh = evalShingles(spark, dir)
-    def src(path: String) = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), evalSh, out, root.resolve("ckpt").toString)
-      .awaitTermination()
+    run(src, evalSh, out, fx.path("ckpt")).awaitTermination()
     // age out the batch-0 (epoch 0) classes; batch-1 claims stay. The
     // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
     // cohort (the abort path is spec-covered elsewhere)
-    sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
-    docs.filter(col("doc_id") % 6 === 4)
+    claimStores(out).foreach(_.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.99))
+    val docs = documents(spark, dir)
+    val twins = docs.filter(col("doc_id") % 6 === 4)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
       .union(docs.filter(col("doc_id") % 6 === 3)
         .select((col("doc_id") + 7000000L).as("doc_id"), col("text")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-    run(src(in2), evalSh, out, root.resolve("ckpt2").toString,
-      epochBase = 2L).awaitTermination()
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-      anyTrue = Seq("keep_quality", "is_contaminated", "admitted"),
-      everyTrue = Seq("is_dup"))
-      .select("doc_id", "keep_quality", "is_dup", "is_contaminated", "admitted")
+    StreamGate.writeBatches(fx.path("in2"), twins)
+    run(StreamGate.source(fx.path("in2"), docs.schema), evalSh, out,
+      fx.path("ckpt2"), epochBase = 2L).awaitTermination()
+    readTextVerdicts(spark, out)
   }
 
   /** Oracle-gated query for the STREAMING CROSS-MODAL gate: the same
@@ -1152,15 +998,15 @@ object CurationStream {
     * in a codec path, a hash, the banding, the claim ordering, or the
     * composition flips a row red. */
   def curationMultimodalStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-mm",
-      Seq("out_mfps", "out_vmfps"))
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt, mediaGate = true).awaitTermination()
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(fx.out),
+    val (fx, src) = parity(spark, dir, "graft-curation-mm")
+    run(src, evalShingles(spark, dir), fx.path("out"), fx.path("ckpt"),
+      mediaGate = true).awaitTermination()
+    StreamGate.readVerdicts(spark, fx.path("out"),
+      Seq("doc_id", "keep_quality", "is_dup", "is_contaminated",
+        "img_ok", "audio_ok", "media_dup", "video_ok", "video_dup", "admitted"),
       anyTrue = Seq("keep_quality", "is_contaminated", "img_ok",
         "audio_ok", "video_ok", "admitted"),
       everyTrue = Seq("is_dup", "media_dup", "video_dup"))
-      .select("doc_id", "keep_quality", "is_dup", "is_contaminated",
-        "img_ok", "audio_ok", "media_dup", "video_ok", "video_dup", "admitted")
   }
 
   /** The full INCREMENTAL MULTIMODAL pre-training loop in one artifact:
@@ -1175,16 +1021,10 @@ object CurationStream {
     * a codec path, the claim ordering, the composition, or the layout
     * flips a manifest row red. */
   def curatedStoreMultimodalStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val fx = streamFixture(spark, dir, "graft-curation-mm-store",
-      Seq("out_mfps", "out_vmfps", "store", "store_tail"))
-    val store = fx.root.resolve("store").toString
-    run(fx.src, fx.evalSh, fx.out, fx.ckpt,
-      storeDir = Some(store), nShards = 4, mediaGate = true).awaitTermination()
-    spark.catalog.refreshByPath(store) // drop FileStatusCache listings taken mid-append
-    graft.operators.LayoutOps
-      .shardManifest(spark, spark.read.parquet(graft.operators.LayoutOps.storeDataDir(store)), 4, tokensCol = "n_words")
-      .select(col("shard"), col("n_docs"), col("n_tokens"), col("min_pos"),
-        col("max_pos"), col("order_digest"))
-      .orderBy("shard")
+    val (fx, src) = parity(spark, dir, "graft-curation-mm-store")
+    run(src, evalShingles(spark, dir), fx.path("out"), fx.path("ckpt"),
+      storeDir = Some(fx.path("store")), nShards = 4, mediaGate = true)
+      .awaitTermination()
+    curatedManifest(spark, fx.path("store"))
   }
 }

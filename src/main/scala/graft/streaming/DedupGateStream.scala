@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.operators.DedupOps
 
 /** Streaming form of the near-dup admission gate: incoming documents
@@ -20,41 +21,17 @@ import graft.operators.DedupOps
   * are trivial. */
 object DedupGateStream {
 
-  private def emptySh(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Seq[String], Long)]
-      .toDF("dbucket", "doc_id", "sh", "epoch")
-  }
-  private def emptyBands(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Int, Long, Long)]
-      .toDF("bucket", "doc_id", "band", "band_hash", "epoch")
-  }
+  private val Bands: StructType = StructType.fromDDL("bucket INT NOT NULL, " +
+    "doc_id BIGINT NOT NULL, band INT NOT NULL, band_hash BIGINT NOT NULL, epoch BIGINT NOT NULL")
+  private val Shingles: StructType = StructType.fromDDL(
+    "dbucket INT NOT NULL, doc_id BIGINT NOT NULL, sh ARRAY<STRING>, epoch BIGINT NOT NULL")
 
-  /** RETENTION for the accreted text index — the epoch-stamped
-    * [[ClaimStore.retentionSweep]] discipline on BOTH stores (band rows
-    * and shingle sets age together: a doc whose claims aged out
-    * re-admits whole). Run between stream runs. Returns (band rows,
-    * shingle rows) dropped. */
-  def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): (Long, Long) = (
-    ClaimStore(s"${outDir}_bands", partitionCol = Some("bucket"))
-      .retentionSweep(spark, emptyBands(spark), minEpoch, maxDropFrac),
-    ClaimStore(s"${outDir}_index", partitionCol = Some("dbucket"))
-      .retentionSweep(spark, emptySh(spark), minEpoch, maxDropFrac))
-
-  /** The band and shingle-index stores as [[Maintenance.Action]]s — see
-    * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
-  def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Seq[Maintenance.Action] = Seq(
-    Maintenance.Action(s"${outDir}_bands", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_bands", partitionCol = Some("bucket")),
-        emptyBands(spark), minEpoch, maxDropFrac)),
-    Maintenance.Action(s"${outDir}_index", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_index", partitionCol = Some("dbucket")),
-        emptySh(spark), minEpoch, maxDropFrac)))
+  /** The accreted text index's two stores, band rows then shingle sets —
+    * both epoch-stamped, so a [[ClaimStore.retentionSweep]] of both ages
+    * a doc out whole (see [[Maintenance.claimActions]]). */
+  def claimStores(outDir: String): Seq[ClaimStore] = Seq(
+    ClaimStore(s"${outDir}_bands", Bands, Some("bucket")),
+    ClaimStore(s"${outDir}_index", Shingles, Some("dbucket")))
 
   /** Probe-key bucket of a MinHash band hash: its low 8 bits (splitmix64
     * output — uniform), 256 possible values, so a batch's touched set is
@@ -99,8 +76,7 @@ object DedupGateStream {
     val spark = corpus.sparkSession
     val spark0 = spark
     import spark0.implicits._
-    val shStore = ClaimStore(s"${outDir}_index", partitionCol = Some("dbucket"))
-    val bandStore = ClaimStore(s"${outDir}_bands", partitionCol = Some("bucket"))
+    val Seq(bandStore, shStore) = claimStores(outDir)
     // base index: shingles AND band rows persist for the stream's
     // lifetime — band hashes of the static corpus are computed once, not
     // once per micro-batch
@@ -108,8 +84,7 @@ object DedupGateStream {
     val baseBands = DedupOps.bandRows(base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     baseBands.count()
-    val query = incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val query = StreamGate.start(incoming, checkpoint) { (batch, batchId) =>
         val iSh = DedupOps.gateShingles(batch)
         val iBands = DedupOps.bandRows(iSh)
         // candidate generation: the batch's bands against the cached base
@@ -117,7 +92,7 @@ object DedupGateStream {
         val touched = iBands.select(bucketOf(col("band_hash")).as("bucket"))
           .distinct().as[Int].collect().toSeq
         val storeBands = bandStore
-          .readPruned(spark, emptyBands(spark), touched)
+          .readPruned(spark, touched)
           .select("doc_id", "band", "band_hash")
         val cand = DedupOps
           .gateCandidates(iBands, baseBands.union(storeBands), maxBandFreq)
@@ -130,7 +105,7 @@ object DedupGateStream {
           // extra job per batch
           val touchedIds = cand.select(dbucketOf(col("corpus_id")).as("d"))
             .distinct().as[Int].collect().toSeq
-          val storeSh = shStore.readPruned(spark, emptySh(spark), touchedIds)
+          val storeSh = shStore.readPruned(spark, touchedIds)
             .dropDuplicates("doc_id")
             .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
           val cShById = base
@@ -138,42 +113,31 @@ object DedupGateStream {
             .union(storeSh)
           val verdict = DedupOps.gateVerdicts(cand, iSh, cShById, batch)
           try {
-            verdict.write.mode(SaveMode.Append).parquet(outDir)
-            if (accrete) {
-              val admitted = verdict.filter(col("decision") === "admit")
-                .select("doc_id")
-              // retention stamp: epochBase is caller-threaded monotone
-              // (restarted streams restart batch ids at 0 — see
-              // MediaDedupStream)
-              val shClaims = iSh.join(admitted, Seq("doc_id"))
-                .select(dbucketOf(col("doc_id")).as("dbucket"),
-                  col("doc_id"), col("sh"),
-                  lit(epochBase + batchId).as("epoch"))
-              val bandClaims = iBands.join(admitted, Seq("doc_id"))
-                .select(bucketOf(col("band_hash")).as("bucket"),
-                  col("doc_id"), col("band"), col("band_hash"),
-                  lit(epochBase + batchId).as("epoch"))
-              // BOTH delta writes land before EITHER store folds: a fold
-              // deletes its consumed delta files, and the second write's
-              // lineage re-reads this batch's store scan when Spark
-              // recomputes instead of hitting the verdict cache (observed
-              // under foreachBatch) — write-all-then-fold-all keeps every
-              // recomputation on files that still exist
-              shStore.appendDelta(shClaims)
-              bandStore.appendDelta(bandClaims)
-              shStore.maybeCompact(spark, shClaims.limit(0))
-              bandStore.maybeCompact(spark, bandClaims.limit(0))
-              ()
-            }
+            val admitted = verdict.filter(col("decision") === "admit")
+              .select("doc_id")
+            // retention stamp: epochBase is caller-threaded monotone
+            // (restarted streams restart batch ids at 0 — see
+            // MediaDedupStream)
+            val shClaims = iSh.join(admitted, Seq("doc_id"))
+              .select(dbucketOf(col("doc_id")).as("dbucket"),
+                col("doc_id"), col("sh"),
+                lit(epochBase + batchId).as("epoch"))
+            val bandClaims = iBands.join(admitted, Seq("doc_id"))
+              .select(bucketOf(col("band_hash")).as("bucket"),
+                col("doc_id"), col("band"), col("band_hash"),
+                lit(epochBase + batchId).as("epoch"))
+            StreamGate.commit(spark,
+              consumers = Seq(() =>
+                verdict.write.mode(SaveMode.Append).parquet(outDir)),
+              claims =
+                if (accrete) Seq(shStore -> shClaims, bandStore -> bandClaims)
+                else Nil)
           } finally verdict.unpersist()
         } finally {
           cand.unpersist()
           iSh.unpersist()
         }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
     // release the corpus index when the stream ends (daemon watcher —
     // run() hands the live query back to the caller, so the index's
     // lifetime is tied to the query's, not to this call)

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.SimilarityOps
@@ -51,31 +52,16 @@ object EmbedDedupStream {
     * full-precision doubles. Verification at the SemDeDup threshold
     * happens at FULL precision, but only on the shortlist the int8
     * probe admits. `epoch` is the RETENTION stamp (caller-threaded
-    * monotone build epoch + batch id) consumed by [[sweepClaims]]. */
-  private def emptyClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Array[Byte], Double, Double, Long)]
-      .toDF("pk", "claim_id", "codes", "vmin", "scale", "epoch")
-  }
+    * monotone build epoch + batch id): [[ClaimStore.retentionSweep]]
+    * between stream runs re-admits an embedding whose every claim aged
+    * out, while in-horizon claims keep rejecting. */
+  private val Claims: StructType = StructType.fromDDL(
+    "pk INT NOT NULL, claim_id BIGINT NOT NULL, codes BINARY, " +
+      "vmin DOUBLE NOT NULL, scale DOUBLE NOT NULL, epoch BIGINT NOT NULL")
 
-  /** RETENTION for the int8 claim store — the epoch-stamped
-    * [[ClaimStore.retentionSweep]] discipline on the embedding gate: an
-    * embedding whose every claim aged out re-admits on its next
-    * arrival, in-horizon claims keep rejecting. Run between stream runs
-    * (offline, like compaction and [[migrateClaims]]). */
-  def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Long =
-    ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac)
-
-  /** The int8 claim store as a [[Maintenance.Action]] — see
-    * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
-  def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Seq[Maintenance.Action] = Seq(
-    Maintenance.Action(s"${outDir}_vfps", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk")),
-        emptyClaims(spark), minEpoch, maxDropFrac)))
+  /** The gate's one deployed store — see [[Maintenance.claimActions]]. */
+  def claimStores(outDir: String): Seq[ClaimStore] =
+    Seq(ClaimStore(s"${outDir}_vfps", Claims, Some("pk")))
 
   /** The int8 probe admits candidates down to threshold − a PER-CLAIM
     * margin derived from that claim's own quantization bound, never a
@@ -113,9 +99,8 @@ object EmbedDedupStream {
       nprobe: Int = 1,
       epochBase: Long = 0L): StreamingQuery = {
     val spark = incoming.sparkSession
-    val store = ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk"))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val Seq(store) = claimStores(outDir)
+    StreamGate.start(incoming, checkpoint) { (batch, batchId) =>
         val spark0 = spark
         import spark0.implicits._
         val vecs = batch.select("vec_id")
@@ -145,7 +130,7 @@ object EmbedDedupStream {
             // int8 SHORTLIST: dequantize the pruned claims (a narrow map
             // over touched cells + the delta budget) and admit candidates
             // at threshold − that claim's own quantization margin …
-            val claimedDv = store.readPruned(spark, emptyClaims(spark), touched)
+            val claimedDv = store.readPruned(spark, touched)
               .select("pk", "claim_id", "codes", "vmin", "scale")
               .as[(Int, Long, Array[Byte], Double, Double)]
               .map { case (pk, id, codes, vmin, scale) =>
@@ -189,12 +174,14 @@ object EmbedDedupStream {
               .persist(StorageLevel.MEMORY_AND_DISK)
             verdict.count()
             try {
-              verdict.write.mode(SaveMode.Append).parquet(outDir)
               // novel vectors claim their (cell, int8 codes, affine
               // params, epoch) BEFORE the checkpoint commits — the store
               // grows into exactly the cell-partitioned QUANTIZED serving
               // layout (`annIvfTopKStaged`'s payload, claim-store bones)
-              store.append(spark, celled
+              StreamGate.commit(spark,
+                consumers = Seq(() =>
+                  verdict.write.mode(SaveMode.Append).parquet(outDir)),
+                claims = Seq(store -> celled
                 .join(verdict.filter(col("admitted")).select("vec_id"),
                   Seq("vec_id"))
                 .select(col("pk"), col("vec_id").as("claim_id"), col("v"))
@@ -220,14 +207,11 @@ object EmbedDedupStream {
                   (pk, id, codes, vmin, scale)
                 }
                 .toDF("pk", "claim_id", "codes", "vmin", "scale")
-                .withColumn("epoch", lit(epochBase + batchId)))
+                .withColumn("epoch", lit(epochBase + batchId))))
             } finally verdict.unpersist()
           } finally probed.unpersist()
         } finally vecs.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   /** CLAIM MIGRATION — the centroid lifecycle consumed by the STREAMING
@@ -250,8 +234,8 @@ object EmbedDedupStream {
       outDir: String,
       vectors: DataFrame,
       newCentroids: Array[Array[Double]]): Unit = {
-    val store = ClaimStore(s"${outDir}_vfps", partitionCol = Some("pk"))
-    store.rewrite(spark, emptyClaims(spark), { claims =>
+    val Seq(store) = claimStores(outDir)
+    store.rewrite(spark, { claims =>
       val pre = claims.select("claim_id").distinct().count()
       val newPk = SimilarityOps.assignCells(newCentroids,
         claims.select(col("claim_id").as("vec_id")).distinct()
@@ -309,39 +293,29 @@ object EmbedDedupStream {
     * leave the brute-force verdicts unchanged (verify is exact either
     * way; widening the candidate set can only confirm the contract). */
   def embedDedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-embeddedup")
-    Seq("in", "out", "out_vfps", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
     val universe = vectorUniverse(spark, dir)
       .persist(StorageLevel.MEMORY_AND_DISK)
     universe.count()
     try {
-      universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")
-        .select("vec_id")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")
-        .select("vec_id")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      val centroids = SimilarityOps.collectCentroids(
-        Tables(spark, dir, "embeddings")
-          .withColumn("v", SimilarityOps.asDouble(col("embedding")))
-          .filter(col("vec_id") < 64))
-      val src = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      run(src, universe, centroids, out, root.resolve("ckpt").toString,
+      val fx = StreamGate.fixture("graft-embeddedup",
+        ids(universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")),
+        ids(universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")))
+      val centroids = pinnedCentroids(spark, dir)
+      run(StreamGate.sourceInferred(fx.in), universe, centroids, fx.path("out"), fx.path("ckpt"),
         nprobe = 2)
         .awaitTermination()
-      StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-        anyTrue = Seq("admitted"),
-        preClaim = Seq("n_matches", "min_match"),
-        carried = Seq("orig_id", "kind"),
-        key = "vec_id")
-        .select("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
+      MediaDedupStream.resolveVerdicts(spark, fx.path("out"), key = "vec_id")
     } finally universe.unpersist()
   }
+
+  private def ids(vectors: DataFrame): DataFrame = vectors.select("vec_id")
+
+  /** The pinned centroid artifact: the first 64 corpus vectors. */
+  private def pinnedCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    SimilarityOps.collectCentroids(
+      Tables(spark, dir, "embeddings")
+        .withColumn("v", SimilarityOps.asDouble(col("embedding")))
+        .filter(col("vec_id") < 64))
 
   /** Oracle-gated query for the CENTROID LIFECYCLE CONSUMED BY THE
     * STREAM — the full drift response a production deployment runs:
@@ -358,27 +332,16 @@ object EmbedDedupStream {
     * artifact, or a cell-recall hole under the refreshed centroids
     * flips rows red. */
   def embedReclusterStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-embedrecluster")
-    Seq("in", "in2", "out", "out_vfps", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
     val universe = vectorUniverse(spark, dir)
       .persist(StorageLevel.MEMORY_AND_DISK)
     universe.count()
     try {
-      def src(path: String) = spark.readStream
-        .schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
       val evens = universe
         .filter(col("vec_id") % 2 === 0 && col("kind") === "orig")
-      evens.select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      val pinned = SimilarityOps.collectCentroids(
-        Tables(spark, dir, "embeddings")
-          .withColumn("v", SimilarityOps.asDouble(col("embedding")))
-          .filter(col("vec_id") < 64))
-      run(src(in), universe, pinned, out, root.resolve("ckpt").toString)
+      val fx = StreamGate.fixture("graft-embedrecluster", ids(evens))
+      val out = fx.path("out")
+      val pinned = pinnedCentroids(spark, dir)
+      run(StreamGate.sourceInferred(fx.in), universe, pinned, out, fx.path("ckpt"))
         .awaitTermination()
       // the refresh between runs: one Lloyd update from the claimed
       // members under the pinned assignment, then claim migration
@@ -386,17 +349,12 @@ object EmbedDedupStream {
         SimilarityOps.assignCells(pinned, evens.select("vec_id", "v"), 1),
         evens.select("vec_id", "v"), pinned)
       migrateClaims(spark, out, universe.select("vec_id", "v"), newCen)
-      universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-      run(src(in2), universe, newCen, out, root.resolve("ckpt2").toString,
+      StreamGate.writeBatches(fx.path("in2"),
+        ids(universe.filter(col("vec_id") % 2 === 1 || col("kind") === "scale")))
+      run(StreamGate.sourceInferred(fx.path("in2")), universe, newCen, out, fx.path("ckpt2"),
         epochBase = 1L)
         .awaitTermination()
-      StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-        anyTrue = Seq("admitted"),
-        preClaim = Seq("n_matches", "min_match"),
-        carried = Seq("orig_id", "kind"),
-        key = "vec_id")
-        .select("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
+      MediaDedupStream.resolveVerdicts(spark, out, key = "vec_id")
     } finally universe.unpersist()
   }
 
@@ -404,7 +362,7 @@ object EmbedDedupStream {
     * [[MediaDedupStream.audioClaimRetentionQuery]] pattern on vectors:
     * even origs stream as batch 0 (epoch 0) and odd origs as batch 1
     * (epoch 1, judged against the batch-0 claims); between stream runs
-    * [[sweepClaims]] ages out every epoch-0 claim under the guardrail;
+    * the retention sweep ages out every epoch-0 claim under the guardrail;
     * then a THIRD batch arrives under a monotone epoch base — the
     * 2×-rescaled twins of (10k)-th (even, AGED-OUT) parents and of
     * (10k+5)-th (odd, in-horizon) parents. A twin of an aged-out parent
@@ -416,44 +374,27 @@ object EmbedDedupStream {
     * surviving set — a sweep that drops an in-horizon claim, keeps an
     * aged one, or a restarted stream whose epochs alias flips rows red. */
   def embedClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-embedretention")
-    Seq("in", "in2", "out", "out_vfps", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
     val universe = vectorUniverse(spark, dir, extraTwinRem = Some(5))
       .persist(StorageLevel.MEMORY_AND_DISK)
     universe.count()
     try {
-      def src(path: String) = spark.readStream
-        .schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      universe.filter(col("vec_id") % 2 === 1 && col("kind") === "orig")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in)
-      val centroids = SimilarityOps.collectCentroids(
-        Tables(spark, dir, "embeddings")
-          .withColumn("v", SimilarityOps.asDouble(col("embedding")))
-          .filter(col("vec_id") < 64))
-      run(src(in), universe, centroids, out, root.resolve("ckpt").toString)
+      val fx = StreamGate.fixture("graft-embedretention",
+        ids(universe.filter(col("vec_id") % 2 === 0 && col("kind") === "orig")),
+        ids(universe.filter(col("vec_id") % 2 === 1 && col("kind") === "orig")))
+      val out = fx.path("out")
+      val centroids = pinnedCentroids(spark, dir)
+      run(StreamGate.sourceInferred(fx.in), universe, centroids, out, fx.path("ckpt"))
         .awaitTermination()
       // age out the batch-0 (epoch 0) claims; batch-1 claims stay. The
       // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
       // cohort (the abort path is spec-covered elsewhere)
-      sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
-      universe.filter(col("kind") === "scale" || col("kind") === "scale2")
-        .select("vec_id").coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-      run(src(in2), universe, centroids, out, root.resolve("ckpt2").toString,
+      claimStores(out).foreach(_.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.99))
+      StreamGate.writeBatches(fx.path("in2"),
+        ids(universe.filter(col("kind") === "scale" || col("kind") === "scale2")))
+      run(StreamGate.sourceInferred(fx.path("in2")), universe, centroids, out, fx.path("ckpt2"),
         epochBase = 2L)
         .awaitTermination()
-      StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
-        anyTrue = Seq("admitted"),
-        preClaim = Seq("n_matches", "min_match"),
-        carried = Seq("orig_id", "kind"),
-        key = "vec_id")
-        .select("vec_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
+      MediaDedupStream.resolveVerdicts(spark, out, key = "vec_id")
     } finally universe.unpersist()
   }
 }

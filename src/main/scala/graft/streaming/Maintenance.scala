@@ -1,15 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** ONE guardrailed maintenance entry point for a composed pipeline's
   * deployed stores — the operational pass a 100 TB deployment schedules
-  * nightly. The gates expose their store maintenance piecemeal
-  * ([[CurationStream.sweepClaims]] over three stores,
-  * [[CurationStream.sweepFunnel]], [[EmbedDedupStream.sweepClaims]],
-  * [[MediaDedupStream.sweepClaims]], [[DedupGateStream.sweepClaims]],
-  * plus per-store compaction); `Maintenance.run` executes a pipeline's
-  * whole action list with PER-STORE guardrail isolation:
+  * nightly. Each streaming gate ([[CurationStream]], [[MediaDedupStream]],
+  * [[EmbedDedupStream]], [[DedupGateStream]]) names its deployed stores
+  * through `claimStores(outDir)` (plus [[CurationStream.funnelStore]],
+  * swept on its batch-id horizon), the stores [[StreamGate.commit]]
+  * appends to per batch; [[claimActions]] turns any of them into
+  * actions, and `Maintenance.run` executes a pipeline's whole action
+  * list with PER-STORE guardrail isolation:
   *
   *  - each action is one store's retention sweep followed by its
   *    budget-gated compaction fold (the sweep is itself a major fold
@@ -101,17 +102,17 @@ object Maintenance {
     Report(outcomes)
   }
 
-  /** The sweep-then-compact step shared by every claim store: expire
-    * claims below the horizon under the guardrail, then fold the delta
-    * backlog if the budget is crossed (a sweep that dropped nothing is
-    * NOT a fold — the compaction keeps the file count bounded on quiet
-    * stores too). */
-  private[streaming] def sweepAndCompact(spark: SparkSession, store: ClaimStore,
-      empty: DataFrame, minEpoch: Long, maxDropFrac: Double,
-      epochCol: String = "epoch"): Long = {
-    val dropped =
-      store.retentionSweep(spark, empty, minEpoch, maxDropFrac, epochCol)
-    store.maybeCompact(spark, empty)
-    dropped
-  }
+  /** One sweep-then-compact action per store: expire claims below the
+    * horizon (`epochCol < minEpoch`) under the guardrail, then fold the
+    * delta backlog if the budget is crossed (a sweep that dropped
+    * nothing is NOT a fold — the compaction keeps the file count bounded
+    * on quiet stores too). */
+  def claimActions(spark: SparkSession, stores: Seq[ClaimStore],
+      minEpoch: Long, maxDropFrac: Double,
+      epochCol: String = "epoch"): Seq[Action] =
+    stores.map(store => Action(store.dir, "retention+compact", { () =>
+      val dropped = store.retentionSweep(spark, minEpoch, maxDropFrac, epochCol)
+      store.maybeCompact(spark)
+      dropped
+    }))
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.MultimodalOps
@@ -59,31 +60,16 @@ object MediaDedupStream {
 
   /** Claim rows pre-exploded to probe keys: pk = band * 256 + value;
     * `epoch` is the RETENTION stamp (caller-threaded monotone build
-    * epoch + batch id) consumed by [[sweepClaims]]. */
-  private def emptyClaims(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long, Long)].toDF("pk", "claim_id", "fhash", "epoch")
-  }
+    * epoch + batch id): [[ClaimStore.retentionSweep]] between stream
+    * runs ages claims out under the drop-fraction guardrail, so an asset
+    * whose every claim aged out RE-ADMITS on its next arrival while
+    * in-horizon claims keep rejecting. */
+  private[streaming] val Claims: StructType = StructType.fromDDL(
+    "pk INT NOT NULL, claim_id BIGINT NOT NULL, fhash BIGINT NOT NULL, epoch BIGINT NOT NULL")
 
-  /** RETENTION for the perceptual claim store — the
-    * [[ClaimStore.retentionSweep]] discipline wired into the gate:
-    * claims older than `minEpoch` fold away under the drop-fraction
-    * guardrail, so an asset whose every claim aged out RE-ADMITS on its
-    * next arrival while in-horizon claims keep rejecting. Run between
-    * stream runs (offline, like compaction). */
-  def sweepClaims(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Long =
-    ClaimStore(s"${outDir}_fps", partitionCol = Some("pk"))
-      .retentionSweep(spark, emptyClaims(spark), minEpoch, maxDropFrac)
-
-  /** The perceptual claim store as a [[Maintenance.Action]] — see
-    * [[Maintenance.run]] and [[CurationStream.maintenanceActions]]. */
-  def maintenanceActions(spark: SparkSession, outDir: String, minEpoch: Long,
-      maxDropFrac: Double): Seq[Maintenance.Action] = Seq(
-    Maintenance.Action(s"${outDir}_fps", "retention+compact", () =>
-      Maintenance.sweepAndCompact(spark,
-        ClaimStore(s"${outDir}_fps", partitionCol = Some("pk")),
-        emptyClaims(spark), minEpoch, maxDropFrac)))
+  /** The gate's one deployed store — see [[Maintenance.claimActions]]. */
+  def claimStores(outDir: String): Seq[ClaimStore] =
+    Seq(ClaimStore(s"${outDir}_fps", Claims, Some("pk")))
 
   private def withPk(df: DataFrame): DataFrame =
     df.withColumn("pk", (col("band") * 256 + col("bv")).cast("int"))
@@ -104,9 +90,8 @@ object MediaDedupStream {
       epochBase: Long = 0L): StreamingQuery = {
     import graft.functions.HammingDistance.hamming
     val spark = incoming.sparkSession
-    val store = ClaimStore(s"${outDir}_fps", partitionCol = Some("pk"))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val Seq(store) = claimStores(outDir)
+    StreamGate.start(incoming, checkpoint) { (batch, batchId) =>
         val spark0 = spark
         import spark0.implicits._
         val hashed = batch
@@ -142,7 +127,7 @@ object MediaDedupStream {
           // hot-key guard: per-pk claim counts are exact on the pruned
           // read (pruning keeps every row of a touched key)
           val corpus = MultimodalOps.capHotKeys(
-            store.readPruned(spark, emptyClaims(spark), touched),
+            store.readPruned(spark, touched),
             Seq("pk"), maxBandFreq)
           val matches = probes
             .join(corpus.select(col("pk"), col("claim_id"),
@@ -162,8 +147,6 @@ object MediaDedupStream {
             .persist(StorageLevel.MEMORY_AND_DISK)
           verdict.count()
           try {
-            verdict.drop("dhash")
-              .write.mode(SaveMode.Append).parquet(outDir)
             // novel assets claim their fingerprint BEFORE the checkpoint
             // commits — pre-exploded to the probe-key layout; the shared
             // ClaimStore folds the file set at the delta budget
@@ -172,18 +155,18 @@ object MediaDedupStream {
             // the base threaded by the caller as a monotone build
             // number — raw batch ids would alias across runs and let a
             // sweep age out fresh claims
-            store.append(spark, withPk(verdict.filter(col("admitted"))
-              .select(col("doc_id").as("claim_id"), col("dhash").as("fhash"))
-              .select(col("claim_id"), col("fhash"),
-                MultimodalOps.hashBands("fhash").as(Seq("band", "bv"))))
-              .withColumn("epoch", lit(epochBase + batchId))
-              .select("pk", "claim_id", "fhash", "epoch"))
+            StreamGate.commit(spark,
+              consumers = Seq(() => verdict.drop("dhash")
+                .write.mode(SaveMode.Append).parquet(outDir)),
+              claims = Seq(store -> withPk(verdict.filter(col("admitted"))
+                .select(col("doc_id").as("claim_id"), col("dhash").as("fhash"))
+                .select(col("claim_id"), col("fhash"),
+                  MultimodalOps.hashBands("fhash").as(Seq("band", "bv"))))
+                .withColumn("epoch", lit(epochBase + batchId))
+                .select("pk", "claim_id", "fhash", "epoch")))
           } finally verdict.unpersist()
         } finally hashed.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   /** Oracle-gated query: PNG (even-id) assets stream through the gate
@@ -197,32 +180,29 @@ object MediaDedupStream {
     * dHash-bit-identical on the DCT-aligned checkerboards —
     * spec-asserted over the full asset period). */
   def imageDedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-mediadedup")
-    Seq("in", "out", "out_fps", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
     val evens = Tables(spark, dir, "documents")
       .select(col("doc_id")).filter(col("doc_id") % 2 === 0)
-    evens.filter(col("doc_id") % 4 === 0)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    evens.filter(col("doc_id") % 4 === 2)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .union(evens
-        .filter(col("doc_id") % 4 === 0)
-        .filter(col("doc_id") % 6 === 0 &&
-          abs(lit(2) * (lit(28) + (col("doc_id") * 37) % 200) - 255) >= 64)
-        .select((col("doc_id") + 3000000L).as("doc_id"),
-          col("doc_id").as("orig_id"), lit("reencode").as("kind")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val src = spark.readStream
-      .schema(spark.read.parquet(in).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    run(src, out, ckpt).awaitTermination()
-    resolveVerdicts(spark, out)
+    val fx = StreamGate.fixture("graft-mediadedup",
+      origs(evens.filter(col("doc_id") % 4 === 0)),
+      origs(evens.filter(col("doc_id") % 4 === 2))
+        .union(evens
+          .filter(col("doc_id") % 4 === 0)
+          .filter(col("doc_id") % 6 === 0 &&
+            abs(lit(2) * (lit(28) + (col("doc_id") * 37) % 200) - 255) >= 64)
+          .select((col("doc_id") + 3000000L).as("doc_id"),
+            col("doc_id").as("orig_id"), lit("reencode").as("kind"))))
+    run(StreamGate.sourceInferred(fx.in), fx.path("out"), fx.path("ckpt")).awaitTermination()
+    resolveVerdicts(spark, fx.path("out"))
   }
+
+  /** Asset rows that are their own originals. */
+  private def origs(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
+
+  /** Gain twins of `ids`, renumbered past the corpus by `offset`. */
+  private def gainTwins(ids: DataFrame, offset: Long): DataFrame =
+    ids.select((col("doc_id") + offset).as("doc_id"),
+      col("doc_id").as("orig_id"), lit("gain").as("kind"))
 
   /** The shared at-least-once READ CONTRACT for perceptual-gate verdict
     * stores: admitted = ANY delivery admitted (a doc's own claim in the
@@ -233,13 +213,15 @@ object MediaDedupStream {
     * of any replay's — the smaller count IS the pre-claim verdict, and
     * equal counts imply the identical set (hence identical min_match).
     * Taking max(n_matches) here would surface a replay's self-match-
-    * inflated count instead of the original verdict. */
-  def resolveVerdicts(spark: SparkSession, out: String): DataFrame =
-    StreamVerdicts.resolvePerDoc(spark.read.parquet(out),
+    * inflated count instead of the original verdict. `key` is the
+    * per-item column (`vec_id` for [[EmbedDedupStream]]'s verdicts). */
+  def resolveVerdicts(spark: SparkSession, out: String,
+      key: String = "doc_id"): DataFrame =
+    StreamGate.readVerdicts(spark, out,
+      Seq(key, "orig_id", "kind", "admitted", "n_matches", "min_match"),
       anyTrue = Seq("admitted"),
       preClaim = Seq("n_matches", "min_match"),
       carried = Seq("orig_id", "kind"))
-      .select("doc_id", "orig_id", "kind", "admitted", "n_matches", "min_match")
 
   /** The AUDIO modality through the same gate: even-id assets stream as
     * batch 0 and seed the claim store; batch 1 brings the odd-id assets
@@ -250,32 +232,18 @@ object MediaDedupStream {
     * audio verify radius 7 — the [[imageDedupStreamQuery]] discipline
     * with zero PNG/JPEG asymmetry. */
   def audioDedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-audiodedup")
-    Seq("in", "out", "out_fps", "ckpt").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
     val docs = Tables(spark, dir, "documents").select(col("doc_id"))
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .union(docs.filter(col("doc_id") % 6 === 4)
-        .select((col("doc_id") + 5000000L).as("doc_id"),
-          col("doc_id").as("orig_id"), lit("gain").as("kind")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    val src = spark.readStream
-      .schema(spark.read.parquet(in).schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    run(src, out, ckpt, radius = 7,
+    val fx = StreamGate.fixture("graft-audiodedup",
+      origs(docs.filter(col("doc_id") % 2 === 0)),
+      origs(docs.filter(col("doc_id") % 2 === 1))
+        .union(gainTwins(docs.filter(col("doc_id") % 6 === 4), 5000000L)))
+    run(StreamGate.sourceInferred(fx.in), fx.path("out"), fx.path("ckpt"), radius = 7,
       hashForKind = MultimodalOps.ahashForKind).awaitTermination()
-    resolveVerdicts(spark, out)
+    resolveVerdicts(spark, fx.path("out"))
   }
 
   /** Oracle-gated RETENTION LIFECYCLE through the gate itself — the full
-    * production story [[sweepClaims]] enables: even-id assets stream as
+    * production story the claim epochs enable: even-id assets stream as
     * batch 0 (epoch 0) and odd-id assets as batch 1 (epoch 1, judged
     * against the batch-0 claims as usual); between stream runs the sweep
     * ages out every epoch-0 claim under the guardrail; then a THIRD
@@ -291,38 +259,23 @@ object MediaDedupStream {
     * claim, keeps an aged one, or a restarted stream whose epochs alias
     * flips rows red. */
   def audioClaimRetentionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TmpStores.pidScopedRoot("graft-audioretention")
-    Seq("in", "in2", "out", "out_fps", "ckpt", "ckpt2").foreach(d =>
-      graft.sources.TmpStores.deleteRecursively(root.resolve(d)))
-    val in = root.resolve("in").toString
-    val in2 = root.resolve("in2").toString
-    val out = root.resolve("out").toString
     val docs = Tables(spark, dir, "documents").select(col("doc_id"))
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("doc_id").as("orig_id"), lit("orig").as("kind"))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in)
-    def src(path: String) = spark.readStream
-      .schema(spark.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    run(src(in), out, root.resolve("ckpt").toString, radius = 7,
+    val fx = StreamGate.fixture("graft-audioretention",
+      origs(docs.filter(col("doc_id") % 2 === 0)),
+      origs(docs.filter(col("doc_id") % 2 === 1)))
+    val out = fx.path("out")
+    run(StreamGate.sourceInferred(fx.in), out, fx.path("ckpt"), radius = 7,
       hashForKind = MultimodalOps.ahashForKind).awaitTermination()
     // age out the batch-0 (epoch 0) claims; batch-1 claims stay. The
     // guardrail sits at 0.99: this sweep EXPECTS to drop a whole epoch
     // cohort, and at larger corpora batch 1 admits few novel claims
     // (most odds match an even within the radius), so the aged fraction
     // legitimately approaches 1 — the abort path is spec-covered
-    sweepClaims(spark, out, minEpoch = 1L, maxDropFrac = 0.99)
-    docs.filter(col("doc_id") % 6 === 4)
-      .select((col("doc_id") + 5000000L).as("doc_id"),
-        col("doc_id").as("orig_id"), lit("gain").as("kind"))
-      .union(docs.filter(col("doc_id") % 6 === 3)
-        .select((col("doc_id") + 7000000L).as("doc_id"),
-          col("doc_id").as("orig_id"), lit("gain").as("kind")))
-      .coalesce(1).write.mode(SaveMode.Append).parquet(in2)
-    run(src(in2), out, root.resolve("ckpt2").toString, radius = 7,
+    claimStores(out).foreach(_.retentionSweep(spark, minEpoch = 1L, maxDropFrac = 0.99))
+    StreamGate.writeBatches(fx.path("in2"),
+      gainTwins(docs.filter(col("doc_id") % 6 === 4), 5000000L)
+        .union(gainTwins(docs.filter(col("doc_id") % 6 === 3), 7000000L)))
+    run(StreamGate.sourceInferred(fx.path("in2")), out, fx.path("ckpt2"), radius = 7,
       hashForKind = MultimodalOps.ahashForKind,
       epochBase = 2L).awaitTermination()
     resolveVerdicts(spark, out)

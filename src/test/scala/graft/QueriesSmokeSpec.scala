@@ -8,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the DuckDB gate (tools/check.py); this keeps `sbt test` self-contained.
   */
 class QueriesSmokeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession("4")
 
   val dir = "/root/testdata/sf0.001"
 

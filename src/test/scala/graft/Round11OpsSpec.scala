@@ -409,8 +409,9 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(rows(3000000L)._2 == 0L, "the twin must match its pre-restart original")
     // the claim store holds exactly the one admitted fingerprint (8
     // pre-exploded (band, value) probe rows, all for claim 0)
-    val claims = graft.streaming.ClaimStore(p("out") + "_fps", Some("pk"))
-      .read(spark, Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash"))
+    val claims = graft.streaming.ClaimStore(p("out") + "_fps",
+        Seq.empty[(Int, Long, Long)].toDF("pk", "claim_id", "fhash").schema, Some("pk"))
+      .read(spark)
       .collect()
     assert(claims.length == 8 &&
       claims.map(_.getAs[Long]("claim_id")).distinct.toSeq == Seq(0L),

@@ -288,11 +288,11 @@ class Round16OpsSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val storeDir = tmpRoot("graft-conform").resolve("c").toString
-    val st = graft.streaming.ClaimStore(storeDir)
-    st.appendDelta(Seq((1, "fp1")).toDF("pk", "fp"))
     val empty = Seq.empty[(Int, String, Long, String)]
       .toDF("pk", "fp", "epoch", "note")
-    val row = st.read(spark, empty)
+    val st = graft.streaming.ClaimStore(storeDir, empty.schema)
+    st.appendDelta(Seq((1, "fp1")).toDF("pk", "fp"))
+    val row = st.read(spark)
       .select("pk", "epoch", "note").collect().head
     assert(row.getLong(1) == 0L, "numeric backfill stays typed zero")
     assert(row.isNullAt(2), "non-numeric backfill must be null, never a cast \"0\"")
